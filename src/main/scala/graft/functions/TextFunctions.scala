@@ -83,7 +83,7 @@ object TextFunctions {
     * h = fold(h * 31 + code(char)) — the classic Rabin-Karp/Java-style
     * rolling hash, computable identically in any SQL engine. Executes
     * as the native PolyHash expression (one fused codegen loop);
-    * `polyHashHof` below is the same arithmetic as column algebra. */
+    * the specs pin it to the same arithmetic as column algebra. */
   def polyHash(c: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       PolyHash(org.apache.spark.sql.graft.ColumnBridge.expression(c), 31L, 0L))
@@ -93,11 +93,6 @@ object TextFunctions {
   def polyHash37(c: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       PolyHash(org.apache.spark.sql.graft.ColumnBridge.expression(c), 37L, 7L))
-
-  /** HOF formulation of polyHash — executable documentation of the
-    * arithmetic the native expression (and the DuckDB oracle) computes. */
-  def polyHashHof(c: Column): Column =
-    aggregate(chars(c), lit(0L), (acc, ch) => (acc * 31 + ascii(ch)) % P)
 
   /** Word n-gram shingles: ["a","b","c","d"] with n=3 →
     * ["a b c","b c d"]; empty when fewer than n tokens. (Built with an
@@ -117,15 +112,10 @@ object TextFunctions {
     * inside one document cannot desync set sizes vs the oracle.
     * Executes as the native ShingleHashes expression (single fused pass,
     * no intermediate shingle strings — measured ~10× over the composed
-    * form); `shingleCodesHof` is the same arithmetic as column algebra. */
+    * form); the specs pin it to the same arithmetic as column algebra. */
   def shingleCodes(text: Column, n: Int): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       ShingleHashes(org.apache.spark.sql.graft.ColumnBridge.expression(text), n, 31L, 0L))
-
-  /** HOF formulation of shingleCodes — executable documentation of what
-    * the native expression (and the DuckDB oracle) computes. */
-  def shingleCodesHof(text: Column, n: Int): Column =
-    array_distinct(transform(array_distinct(shingles(tokens(text), n)), s => polyHash(s)))
 
   /** MinHash signature entry i over a set of codes:
     * min over x of ((2i+1)·x + 104729·i + 12345) mod P. Odd multipliers

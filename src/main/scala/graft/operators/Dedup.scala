@@ -2277,11 +2277,10 @@ object Dedup {
       .filter(col("jaccard") >= JaccardThreshold)
       .groupBy(col("batch_id"))
       .agg(count(lit(1)).as("n_dups"), max(col("jaccard")).as("best_jaccard"))
-    // verdict universe: the batch's own shingleable mod-4 docs — the
-    // same rows winnowVerdict's (sets ∪ batch) filter selected when the
-    // index holds no batch-mod docs, without re-scanning the sets table
+    // verdict universe: every shingleable doc of the batch — the caller
+    // chooses the batch (the drill passes its mod-4 split), so the probe
+    // judges whatever arrives
     batchSh.filter(col("sz") > 0)
-      .filter(pmod(col("doc_id"), lit(IncrementalBatchMod)) === 0)
       .select(col("doc_id").as("batch_id"))
       .join(dups, Seq("batch_id"), "left")
       .select(col("batch_id"),

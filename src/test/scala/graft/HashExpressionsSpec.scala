@@ -87,9 +87,9 @@ class HashExpressionsSpec extends SparkSpec {
     val df = samples(600, 700).toDF("text")
     val bad = df.select(
         TextFunctions.polyHash(col("text")).as("nh"),
-        TextFunctions.polyHashHof(col("text")).as("hh"),
+        HofFormulations.polyHashHof(col("text")).as("hh"),
         TextFunctions.shingleCodes(col("text"), 3).as("nc"),
-        TextFunctions.shingleCodesHof(col("text"), 3).as("hc"))
+        HofFormulations.shingleCodesHof(col("text"), 3).as("hc"))
       .filter(col("nh") =!= col("hh") || col("nc") =!= col("hc"))
       .count()
     assert(bad == 0)

@@ -114,6 +114,43 @@ class StreamingIngestGateSpec extends SparkSpec {
       "gate must emit exactly one verdict per arriving doc")
   }
 
+  test("winnow gate judges arrivals of any doc_id against the full-corpus index") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+    def novel(seed: Char): String =
+      (1 to 40).map(i => s"zw$seed$i").mkString(" ")
+    // a verbatim copy of the longest corpus document, under an id no
+    // drill split would pick
+    val copied = Tables.documents(spark, sf0001)
+      .orderBy(length(col("text")).desc, col("doc_id")).select("text").head().getString(0)
+    val arrivals = Seq((1000001L, novel('a')), (1000002L, novel('b')),
+      (1000003L, novel('c')), (1000004L, novel('d')), (1000005L, copied))
+
+    val input = MemoryStream[(Long, String)]
+    val got = mutable.Buffer[Row]()
+    val q = StreamingIngestGate.startWinnow(spark, sf0001,
+      input.toDF().toDF("doc_id", "text")) { (verdict, _) =>
+      got.synchronized { got ++= verdict.collect() }
+    }
+    try {
+      input.addData(arrivals: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    // (n_dups, keep, no_content, admit) per arrival
+    val byId = got.map(r => r.getLong(0) ->
+      ((r.getLong(1), r.getBoolean(3), r.getBoolean(4), r.getBoolean(5)))).toMap
+    assert(byId.keySet == arrivals.map(_._1).toSet, s"one verdict per arrival: $byId")
+    (1000001L to 1000004L).foreach { id =>
+      assert(byId(id) == ((0L, true, false, true)), s"novel doc $id not admitted: $byId")
+    }
+    val (nDups, keep, noContent, admit) = byId(1000005L)
+    assert(nDups >= 1L && !keep && !noContent && !admit,
+      s"corpus copy not flagged: $byId")
+  }
+
   test("admitting gate: a duplicate of a just-kept doc is flagged across batches") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

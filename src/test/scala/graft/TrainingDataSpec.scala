@@ -53,7 +53,7 @@ class TrainingDataSpec extends SparkSpec {
   test("native PolyHash expression equals the HOF formulation on real data") {
     val bad = Tables.documents(spark, sf0001)
       .select(TextFunctions.polyHash(col("text")).as("native"),
-        TextFunctions.polyHashHof(col("text")).as("hof"))
+        HofFormulations.polyHashHof(col("text")).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(bad == 0)
   }
@@ -61,7 +61,7 @@ class TrainingDataSpec extends SparkSpec {
   test("native ShingleHashes equals the HOF formulation on real data") {
     val bad = Tables.documents(spark, sf0001)
       .select(TextFunctions.shingleCodes(col("text"), 3).as("native"),
-        TextFunctions.shingleCodesHof(col("text"), 3).as("hof"))
+        HofFormulations.shingleCodesHof(col("text"), 3).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(bad == 0)
   }
